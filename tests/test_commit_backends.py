@@ -8,18 +8,20 @@ is a real copy) and never relies on rename chains, matching the verbs
 S3-class stores actually offer (reference: iceberg_storage.rs:1000-1161
 S3 PUTs + storage/catalog.rs:166-216 catalog CAS)."""
 
+import json
 import os
 import unittest.mock as mock
 
 import pytest
 
 from zombi_spark.ingest.batch import RAW_EVENT_SCHEMA, prepare_events
+from zombi_spark.ingest.extraction import FieldSpec, TableSchemaConfig
 from zombi_spark.table.commit_backend import (
     ObjectStoreCommitBackend,
     PosixCommitBackend,
     get_backend,
 )
-from zombi_spark.table.event_table import EventTable
+from zombi_spark.table.event_table import CommitConflictError, EventTable
 
 BOTH = pytest.mark.parametrize("backend_name", ["posix", "objectstore"])
 
@@ -162,6 +164,219 @@ def test_concurrent_append_delete_race_both_backends(
     assert raced["done"] and rep["rows_removed"] == doomed
     assert t.read().where("topic = 'race'").count() == 3
     assert t.read().count() == 20 - doomed + 3
+
+
+FIELD_A = TableSchemaConfig(fields=[FieldSpec("a", "a", "int64")])
+FIELD_B = TableSchemaConfig(fields=[FieldSpec("b", "b", "utf8")])
+FIELDS_AB = TableSchemaConfig(fields=FIELD_A.fields + FIELD_B.fields)
+
+
+def _json_batch(spark, start, n, topic="t"):
+    rows = [
+        (topic, 0, json.dumps({"a": i, "b": f"B{i}"}).encode(), 1704067200000 + i * 1000, None, i)
+        for i in range(start, start + n)
+    ]
+    return prepare_events(spark.createDataFrame(rows, RAW_EVENT_SCHEMA))
+
+
+def _rival_first(backend, rival):
+    """A copy of ``backend`` whose first write under ``_zombi_meta/``
+    lets ``rival`` run to completion before it proceeds — what a second
+    process does when it commits between this writer's read of the table
+    state and its own write."""
+
+    class RivalFirst(type(backend)):
+        def _let_rival_in(self, dest):
+            nonlocal rival
+            if rival is not None and f"{os.sep}_zombi_meta{os.sep}" in dest:
+                run, rival = rival, None
+                run()
+
+        def publish_exclusive(self, tmp, dest):
+            self._let_rival_in(dest)
+            super().publish_exclusive(tmp, dest)
+
+        def swing(self, tmp, dest):
+            self._let_rival_in(dest)
+            super().swing(tmp, dest)
+
+    return RivalFirst()
+
+
+@BOTH
+def test_concurrent_widenings_both_land(spark, tmp_path, backend_name, use_backend):
+    """Two writers widen the schema with different fields; both handles
+    exist before either commits. The rival claims version 0 first, so
+    the other writer's commit conflicts, rebases and re-merges its field
+    over the winner's: the committed schema holds both."""
+    use_backend(backend_name)
+    root = str(tmp_path)
+
+    def rival():
+        b = EventTable(spark, root, "events", schema_config=FIELD_B)
+        b.append(_json_batch(spark, 0, 3, topic="b"))
+
+    a = EventTable(
+        spark, root, "events", schema_config=FIELD_A,
+        backend=_rival_first(get_backend(), rival),
+    )
+    a.append(_json_batch(spark, 0, 4, topic="a"))
+    assert a.latest_version() == 1  # the rival won version 0; we rebased
+    assert {r.topic for r in a.read(version=0).collect()} == {"b"}
+
+    plain = EventTable(spark, root, "events")
+    assert {"a", "b"} <= set(plain.table_schema().fieldNames())
+    rows = plain.read().collect()
+    assert sorted(r.a for r in rows if r.topic == "a") == [0, 1, 2, 3]
+    assert sorted(r.b for r in rows if r.topic == "b") == ["B0", "B1", "B2"]
+    assert all(r.b is None for r in rows if r.topic == "a")
+    assert all(r.a is None for r in rows if r.topic == "b")
+
+
+def _plain_rows_kept(spark, root, n):
+    """The table is plain and its ``n`` rows keep their payload."""
+    plain = EventTable(spark, root, "events")
+    assert "payload" in plain.table_schema().fieldNames()
+    rows = plain.read().collect()
+    assert sorted(json.loads(bytes(r.payload))["a"] for r in rows) == list(range(n))
+
+
+@BOTH
+def test_extraction_commit_onto_plain_table_refused(
+    spark, tmp_path, backend_name, use_backend
+):
+    """An extraction handle built while the table is empty must not
+    commit over plain rows a plain handle committed meanwhile — that
+    commit would hide their payload. Refused both when the plain rows
+    land before the append starts and when they win the race to
+    version 0 mid-commit (the conflict rebases onto a plain parent)."""
+    use_backend(backend_name)
+    root = str(tmp_path)
+    late = EventTable(spark, root, "events", schema_config=FIELD_A)
+    EventTable(spark, root, "events").append(_json_batch(spark, 0, 3))
+    with pytest.raises(ValueError, match="plain-event"):
+        late.append(_json_batch(spark, 3, 2))
+    _plain_rows_kept(spark, root, 3)
+
+    root = str(tmp_path / "race")
+
+    def rival():
+        EventTable(spark, root, "events").append(_json_batch(spark, 0, 3))
+
+    racer = EventTable(
+        spark, root, "events", schema_config=FIELD_A,
+        backend=_rival_first(get_backend(), rival),
+    )
+    with pytest.raises(ValueError, match="plain-event"):
+        racer.append(_json_batch(spark, 3, 2, topic="x"))
+    _plain_rows_kept(spark, root, 3)
+
+
+@BOTH
+def test_plain_append_onto_extraction_table_refused(
+    spark, tmp_path, backend_name, use_backend
+):
+    """The mirror race: a plain handle stages payload-bearing files on
+    an empty table, and an extraction writer claims version 0 first.
+    The plain files are not committed under the extraction schema."""
+    use_backend(backend_name)
+    root = str(tmp_path)
+
+    def rival():
+        EventTable(spark, root, "events", schema_config=FIELD_A).append(
+            _json_batch(spark, 0, 3, topic="x")
+        )
+
+    plain = EventTable(spark, root, "events", backend=_rival_first(get_backend(), rival))
+    with pytest.raises(CommitConflictError, match="became an extraction table"):
+        plain.append(_json_batch(spark, 3, 2))
+    assert plain.latest_version() == 0
+    rows = plain.read().collect()
+    assert "payload" not in plain.table_schema().fieldNames()
+    assert sorted(r.a for r in rows) == [0, 1, 2] and {r.topic for r in rows} == {"x"}
+
+
+@BOTH
+def test_type_clash_with_rival_surfaces_at_commit(
+    spark, tmp_path, backend_name, use_backend
+):
+    """Both handles are built before either commits, with ``a`` typed
+    differently. The rival commits ``a: utf8`` first; the other append
+    fails closed with ``ValueError`` at commit and the table keeps only
+    the rival's rows, still readable."""
+    use_backend(backend_name)
+    root = str(tmp_path)
+    a_utf8 = TableSchemaConfig(fields=[FieldSpec("a", "a", "utf8")])
+
+    def rival():
+        EventTable(spark, root, "events", schema_config=a_utf8).append(
+            _json_batch(spark, 0, 3, topic="x")
+        )
+
+    loser = EventTable(
+        spark, root, "events", schema_config=FIELD_A,
+        backend=_rival_first(get_backend(), rival),
+    )
+    with pytest.raises(ValueError, match="cannot change type"):
+        loser.append(_json_batch(spark, 3, 2))
+    t = EventTable(spark, root, "events")
+    assert t.latest_version() == 0
+    assert t.table_schema()["a"].dataType.simpleString() == "string"
+    assert sorted(r.a for r in t.read().collect()) == ["0", "1", "2"]
+
+
+@BOTH
+def test_time_travel_across_widening_both_backends(
+    spark, tmp_path, backend_name, use_backend
+):
+    """A read AS OF a pre-widening version exposes that version's
+    columns (engine read and the zombi format alike), and its Iceberg
+    snapshot carries the matching schema-id."""
+    from zombi_spark.sources.datasource import register_zombi_datasource
+    from zombi_spark.table.iceberg_meta import current_metadata, snapshot_id_long
+
+    use_backend(backend_name)
+    t1 = EventTable(spark, str(tmp_path), "events", schema_config=FIELD_A)
+    t1.append(_json_batch(spark, 0, 3))
+    t2 = EventTable(spark, str(tmp_path), "events", schema_config=FIELDS_AB)
+    t2.append(_json_batch(spark, 3, 2))
+
+    assert "b" not in t2.read(version=0).columns
+    assert t2.read(version=0).count() == 3
+    assert "b" in t2.read(version=1).columns and t2.read().count() == 5
+    register_zombi_datasource(spark)
+    old = spark.read.format("zombi").option("version", 0).load(t2.path)
+    assert "b" not in old.columns and old.count() == 3
+
+    meta = current_metadata(t2.path)
+    names = {s["schema-id"]: {f["name"] for f in s["fields"]} for s in meta["schemas"]}
+    by_sid = {s["snapshot-id"]: s["schema-id"] for s in meta["snapshots"]}
+    v0, v1 = (snapshot_id_long(s["snapshot_id"]) for s in t2.snapshots())
+    assert "b" not in names[by_sid[v0]] and "a" in names[by_sid[v0]]
+    assert {"a", "b"} <= names[by_sid[v1]]
+
+
+def test_rebuilt_metadata_recovers_per_snapshot_schema_ids(spark, tmp_path):
+    """Deleting ``metadata/`` on an evolved table and rebuilding it from
+    the snapshot log gives every snapshot back its commit-time schema-id
+    (and the same schemas, field ids included)."""
+    import shutil as _shutil
+
+    from zombi_spark.table.iceberg_meta import current_metadata, rebuild_metadata
+
+    t1 = EventTable(spark, str(tmp_path), "events", schema_config=FIELD_A)
+    t1.append(_json_batch(spark, 0, 2))
+    t2 = EventTable(spark, str(tmp_path), "events", schema_config=FIELDS_AB)
+    t2.append(_json_batch(spark, 2, 2))
+    t2.append(_json_batch(spark, 4, 2))
+    before = current_metadata(t2.path)
+
+    _shutil.rmtree(os.path.join(t2.path, "metadata"))
+    rebuild_metadata(t2.path, t2.name, t2.snapshots(), backend=t2.backend)
+    after = current_metadata(t2.path)
+    ids = [s["schema-id"] for s in after["snapshots"]]
+    assert ids == [s["schema-id"] for s in before["snapshots"]] == [0, 1, 1]
+    assert after["schemas"] == before["schemas"]
 
 
 def test_rollup_sharded_carry_forward_without_hardlinks(spark, tmp_path, use_backend):

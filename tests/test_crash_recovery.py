@@ -81,7 +81,7 @@ def test_append_crash_after_move_not_adopted(spark, tmp_path):
     # simulate the crash window: stage-and-move runs, commit never does
     events = prepare_events(_batch(spark, 100, 7))
     staging = os.path.join(t.path, ".append-crashed")
-    moved = t._stage_and_move(events, staging)
+    moved = t._stage_and_move(events, staging, schema=t.table_schema())
     assert moved  # files really landed in the data tree
 
     assert t.read().count() == 10  # invisible to the committed view

@@ -282,8 +282,8 @@ def test_orphan_staging_files_from_failed_attempts_are_not_promoted(spark, tmp_p
 
     real_stage = EventTable._stage_arrow
 
-    def stage_with_orphan(self, shaped, staging, cap):
-        stats = real_stage(self, shaped, staging, cap)
+    def stage_with_orphan(self, shaped, staging, *args):
+        stats = real_stage(self, shaped, staging, *args)
         # simulate a failed attempt's leftover: a valid parquet in
         # staging that the successful job did not report
         some_rel = next(iter(stats))

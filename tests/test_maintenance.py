@@ -180,22 +180,31 @@ def test_expired_version_read_raises_value_error(spark, tmp_path):
     assert t.read(version=t.latest_version()).count() == 18
 
 
-def test_remove_orphans_reclaims_undotted_meta_tmp(spark, tmp_path):
-    """Round-6 review fix: interrupted table.json / extracted_fields.json
-    writes leave UNDOTTED .tmp files the old dot-only pattern never
-    matched — they must be reclaimed like any crashed meta commit."""
+def test_remove_orphans_reclaims_interrupted_meta_tmp(spark, tmp_path):
+    """Interrupted meta commits leave dotted ``.tmp`` files that are
+    reclaimed like any crashed meta commit. The snapshot log is the only
+    schema record: append, compact and delete_where on an extraction
+    table leave no side schema files under ``_zombi_meta/``."""
     import os
 
     from zombi_spark.ingest.batch import RAW_EVENT_SCHEMA, prepare_events
+    from zombi_spark.ingest.extraction import FieldSpec, TableSchemaConfig
     from zombi_spark.table.event_table import EventTable
 
-    t = EventTable(spark, str(tmp_path), "events")
-    rows = [("t", 0, b"x", 1704067200000, None, 1)]
-    t.append(prepare_events(spark.createDataFrame(rows, RAW_EVENT_SCHEMA)))
+    cfg = TableSchemaConfig(
+        payload_format="json", fields=[FieldSpec("k", "k", "int64")]
+    )
+    t = EventTable(spark, str(tmp_path), "events", schema_config=cfg)
+    for i in (1, 2):
+        rows = [("t", 0, b'{"k": %d}' % i, 1704067200000 + i, None, i)]
+        t.append(prepare_events(spark.createDataFrame(rows, RAW_EVENT_SCHEMA), existing=t.read()))
+    t.compact(min_input_files=2)
+    t.delete_where("k = 1")
+    assert sorted(r.k for r in t.read().collect()) == [2]
+    assert not {"table.json", "extracted_fields.json"} & set(os.listdir(t.meta_path))
     leftovers = [
-        os.path.join(t.meta_path, "table.json.tmp"),
-        os.path.join(t.meta_path, "extracted_fields.json.deadbeef.tmp"),
         os.path.join(t.meta_path, ".snap-00000099.json.tmp"),
+        os.path.join(t.meta_path, ".snap-00000099.1a2b3c4d.json.tmp"),
     ]
     for p in leftovers:
         with open(p, "w") as fh:
@@ -204,8 +213,8 @@ def test_remove_orphans_reclaims_undotted_meta_tmp(spark, tmp_path):
     removed = t.remove_orphans(older_than_s=3600)
     for p in leftovers:
         assert p in removed and not os.path.exists(p), p
-    # the LIVE meta files are untouched
-    assert os.path.isfile(os.path.join(t.meta_path, "table.json"))
+    # the LIVE snapshot log is untouched
+    assert t.read().count() == 1
 
 
 def test_schema_config_cannot_convert_a_populated_plain_table(spark, tmp_path):

@@ -53,9 +53,11 @@ def test_list_and_load(served_catalog):
     loc = result["metadata-location"]
     assert loc.endswith(".metadata.json") and os.path.isfile(loc)
     assert json.load(open(loc))["format-version"] == 2
-    # a registered-but-empty table falls back to the private table.json
+    # a registered-but-empty table has no Iceberg metadata yet: the REST
+    # spec's null metadata-location, never a private non-Iceberg file
     empty = client.load_table("wire-b")
-    assert empty["metadata-location"].endswith("_zombi_meta/table.json")
+    assert empty["metadata-location"] is None
+    assert empty["metadata"]["schema"] is None
 
 
 def test_head_probe_and_404(served_catalog):

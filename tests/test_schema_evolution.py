@@ -70,7 +70,7 @@ def test_column_add_evolution_old_files_serve_null(spark, tmp_path):
     assert [rows[s].label for s in (5, 6, 7, 8)] == ["L4", "L5", "L6", "L7"]
     ovf = json.loads(bytes(rows[5]._payload_overflow))
     assert set(ovf) == {"extra"}
-    # table.json reflects the union schema
+    # the table metadata reflects the union schema
     schema_fields = [f["name"] for f in t2.table_metadata()["schema"]["fields"]]
     assert schema_fields[-3:] == ["k", "label", "_payload_overflow"]
     # the old handle (v1 config) ALSO sees the widened schema — evolution
@@ -79,7 +79,10 @@ def test_column_add_evolution_old_files_serve_null(spark, tmp_path):
 
 
 def test_type_change_rejected(spark, tmp_path):
-    EventTable(spark, str(tmp_path), "events", schema_config=V1)
+    # the committed field list is what a config is checked against: an
+    # uncommitted handle records nothing
+    t = EventTable(spark, str(tmp_path), "events", schema_config=V1)
+    t.append(prepare_events(_batch(spark, 0, 2)))
     import pytest
 
     bad = TableSchemaConfig(
@@ -88,6 +91,24 @@ def test_type_change_rejected(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="cannot change type"):
         EventTable(spark, str(tmp_path), "events", schema_config=bad)
+
+
+def test_uncommitted_config_never_widens_the_table(spark, tmp_path):
+    """Constructing a handle with a widening config writes nothing: the
+    schema changes only when that handle commits. A plain handle opened
+    afterwards, and the zombi format, still see the committed columns."""
+    from zombi_spark.sources.datasource import register_zombi_datasource
+
+    t1 = EventTable(spark, str(tmp_path), "events", schema_config=V1)
+    t1.append(prepare_events(_batch(spark, 0, 3)))
+    before = t1.table_schema()
+    EventTable(spark, str(tmp_path), "events", schema_config=V2)  # never commits
+
+    plain = EventTable(spark, str(tmp_path), "events")
+    assert plain.table_schema() == before
+    assert "label" not in plain.table_schema().fieldNames()
+    register_zombi_datasource(spark)
+    assert spark.read.format("zombi").load(plain.path).schema == before
 
 
 def test_streaming_ingest_into_extraction_table(spark, tmp_path):
@@ -362,20 +383,24 @@ def test_widening_stale_narrow_config_tolerated(spark, tmp_path):
     the stored type is authoritative (table property, not session)."""
     from pyspark.sql import types as T
 
-    EventTable(spark, str(tmp_path), "events", schema_config=W_NARROW)
-    EventTable(spark, str(tmp_path), "events", schema_config=W_WIDE)
+    t1 = EventTable(spark, str(tmp_path), "events", schema_config=W_NARROW)
+    t1.append(prepare_events(_nbatch(spark, 0, [1])))
+    t2 = EventTable(spark, str(tmp_path), "events", schema_config=W_WIDE)
+    t2.append(prepare_events(_nbatch(spark, 1, [2]), existing=t2.read()))
     t3 = EventTable(spark, str(tmp_path), "events", schema_config=W_NARROW)
     assert t3.table_schema()["n"].dataType == T.LongType()
     # appends through the stale handle extract with the WIDE stored type
     big = 2**40
-    t3.append(prepare_events(_nbatch(spark, 0, [big])))
-    assert [r.n for r in t3.read().collect()] == [big]
+    t3.append(prepare_events(_nbatch(spark, 2, [big]), existing=t3.read()))
+    assert t3.table_schema()["n"].dataType == T.LongType()
+    assert sorted(r.n for r in t3.read().collect()) == [1, 2, big]
 
 
 def test_widening_rejects_everything_but_int32_to_int64(spark, tmp_path):
     import pytest
 
-    EventTable(spark, str(tmp_path), "events", schema_config=W_WIDE)
+    t = EventTable(spark, str(tmp_path), "events", schema_config=W_WIDE)
+    t.append(prepare_events(_nbatch(spark, 0, [1])))
     for bad_type in ("utf8", "float64", "boolean"):
         bad = TableSchemaConfig(
             payload_format="json",

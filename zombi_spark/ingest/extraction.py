@@ -79,6 +79,31 @@ class TableSchemaConfig:
     fields: list[FieldSpec] = field(default_factory=list)
 
 
+def table_schema_for_fields(fields: list[dict]):
+    """The stored schema of a table whose snapshot records ``fields``
+    (``{name, json_path, data_type}`` dicts): the canonical event schema
+    when there are none, else the system columns with ``payload``
+    replaced by the extracted columns plus ``_payload_overflow``."""
+    from pyspark.sql import types as T
+
+    from zombi_spark.ingest.batch import EVENT_SCHEMA
+
+    if not fields:
+        return EVENT_SCHEMA
+    type_of = {
+        "string": T.StringType(),
+        "int": T.IntegerType(),
+        "long": T.LongType(),
+        "double": T.DoubleType(),
+        "boolean": T.BooleanType(),
+        "binary": T.BinaryType(),
+    }
+    out = [f for f in EVENT_SCHEMA.fields if f.name != "payload"]
+    for f in fields:
+        out.append(T.StructField(f["name"], type_of[_TYPE_MAP[f["data_type"]]], True))
+    out.append(T.StructField("_payload_overflow", T.BinaryType(), True))
+    return T.StructType(out)
+
 
 def remove_json_path(value, parts: list[str]) -> bool:
     """Port of the reference's recursive leaf removal

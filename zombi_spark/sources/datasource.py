@@ -873,7 +873,8 @@ class ZombiDataSource(DataSource):
                 f"unknown metadata table {mode!r}: expected 'files', "
                 "'snapshots', or 'delete_files'"
             )
-        full = table_schema_for(_resolve_path(dict(self.options)))
+        path = _resolve_path(dict(self.options))
+        full = table_schema_for(path, _version_option(path, dict(self.options)))
         if not fields:
             return full
         # option("fields", "a,b") — MANUAL column projection, the
@@ -905,15 +906,12 @@ class ZombiDataSource(DataSource):
         return ZombiStreamReader(schema, dict(self.options))
 
 
-def table_schema_for(path: str) -> StructType:
-    """The table's declared schema: ``table.json`` (written at first
-    commit, evolves on column-ADD) — falling back to the canonical event
-    schema for a pre-snapshot table."""
-    table = _table_for(path)
-    meta = table.table_metadata()
-    if meta and "schema" in meta:
-        return StructType.fromJson(meta["schema"])
-    return table.table_schema()
+def table_schema_for(path: str, version: int | None = None) -> StructType:
+    """The table's declared schema AS OF ``version`` (latest when None),
+    derived from that snapshot's recorded field list — so time travel
+    reads the columns of its own version; the canonical event schema for
+    a pre-snapshot table."""
+    return _table_for(path).table_schema(version)
 
 
 def register_zombi_datasource(spark) -> None:

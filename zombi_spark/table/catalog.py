@@ -154,8 +154,8 @@ class Catalog:
         return EventTable(self.spark, os.path.dirname(path), os.path.basename(path))
 
     def head(self, name: str) -> dict:
-        """Table info without touching data: schema / partition spec from
-        the table metadata + the latest snapshot's version, watermarks,
+        """Table info without touching data: schema / partition spec
+        derived from the latest snapshot, plus its version, watermarks,
         and file/row counts (the LoadTableResult shape,
         api/catalog.rs:293-333)."""
         t = self.load(name)

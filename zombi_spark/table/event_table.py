@@ -20,8 +20,13 @@ commits with Iceberg-shaped metadata:
     planned against; if another commit landed first the version file
     already exists and the commit raises :class:`CommitConflictError`
     instead of silently last-write-winning.
-  - **table metadata** (``table.json``): schema, partition spec, sort
-    order — the ``v{N}.metadata.json`` analogue.
+  - **schema in the commit**: each snapshot of an extraction table
+    carries the full extracted-field list (``extracted_fields``), carried
+    forward on every commit like the watermarks, so every version knows
+    its own schema (Iceberg v2's per-snapshot ``schema-id``).
+    :meth:`table_schema` and :meth:`table_metadata` (schema, partition
+    spec, sort order) are derived from it; there is no other schema
+    record.
   - **snapshot expiration** (:meth:`expire_snapshots`): drops old
     snapshots after materializing the survivor chain's base, after which
     :meth:`remove_orphans` can reclaim files only those snapshots held.
@@ -346,11 +351,13 @@ class EventTable:
     iceberg.rs:192-266): each append extracts the configured typed fields
     out of the JSON payload, the remainder lands in ``_payload_overflow``,
     and the raw ``payload`` column is dropped from the stored schema.
-    Column-ADD evolution is supported: reopening the table with a config
-    containing new fields widens ``table.json``'s extracted-field list;
-    reads declare the union schema, so files written before the new field
-    existed serve NULL for it (the parquet reader fills missing columns) —
-    the same add-column evolution Iceberg performs.
+    Column-ADD evolution is supported: a handle whose config contains new
+    fields widens the extracted-field list its next commit records (the
+    constructor only validates; nothing is written until a commit).
+    Reads declare the union schema of their version, so files written
+    before the new field existed serve NULL for it (the parquet reader
+    fills missing columns) — the same add-column evolution Iceberg
+    performs.
     """
 
     def __init__(
@@ -378,28 +385,16 @@ class EventTable:
         self._active_cache: dict[int, list[dict]] = {}
         # version -> list[position-delete file entry dict] (same immutability)
         self._active_delete_cache: dict[int, list[dict]] = {}
+        # version -> the extracted-field list that snapshot records (same
+        # immutability); filled by every snapshot read
+        self._fields_cache: dict[int, list[dict]] = {}
         if schema_config is not None and schema_config.fields:
-            # reject converting a PLAIN table that already holds data:
-            # extraction tables drop the payload column from the schema,
-            # so flipping an existing payload-bearing table would make
-            # every committed row's content unreadable (old rows would
-            # serve NULL extracted fields AND no payload). Column-ADD
-            # evolution on an already-extracting table stays allowed.
-            if not self.extracted_fields() and self.latest_version() is not None:
-                raise ValueError(
-                    f"table {self.name!r} already holds committed plain-event "
-                    "data; converting it to an extraction table would hide "
-                    "every existing row's payload. Create a new table (or "
-                    "re-ingest) instead."
-                )
-            self._merge_extracted_fields(schema_config)
+            self.extracted_fields()  # type change / plain table: refuse early
 
     # ------------------------------------------------- extracted schema
-    def _extracted_fields_path(self) -> str:
-        return os.path.join(self.meta_path, "extracted_fields.json")
-
-    def _merge_extracted_fields(self, config) -> None:
-        """Record (and widen) the table's extracted-field list — the
+    def _merge_extracted_fields(self, committed: list[dict] | None) -> list[dict]:
+        """The field list ``committed`` (None before the first commit)
+        widened by this handle's config — the
         column-add half of schema evolution, plus Iceberg's safe type
         promotions (r15): ``int32 -> int64`` widens the stored type (the
         counter-outgrew-int32 case; Iceberg spec "int to long" evolution).
@@ -411,11 +406,23 @@ class EventTable:
         Conversions rule). A config narrower than the stored type is
         tolerated and keeps the wider stored type — evolution is a table
         property, not a session property. Every other type change is
-        rejected (matches Iceberg: no narrowing, no cross-kind casts)."""
+        rejected (matches Iceberg: no narrowing, no cross-kind casts).
+
+        Converting a committed PLAIN table (``committed == []``) is
+        refused: extraction tables drop the payload column from the
+        schema, so every committed row's content would become unreadable
+        (NULL extracted fields AND no payload)."""
         promotions = {("int32", "int64")}
-        os.makedirs(self.meta_path, exist_ok=True)
-        current = {f["name"]: f for f in self.extracted_fields()}
-        for spec in config.fields:
+        specs = self.schema_config.fields if self.schema_config is not None else []
+        if committed == [] and specs:
+            raise ValueError(
+                f"table {self.name!r} already holds committed plain-event "
+                "data; converting it to an extraction table would hide "
+                "every existing row's payload. Create a new table (or "
+                "re-ingest) instead."
+            )
+        current = {f["name"]: f for f in committed or []}
+        for spec in specs:
             prev = current.get(spec.name)
             data_type = spec.data_type
             if prev is not None and prev["data_type"] != spec.data_type:
@@ -433,43 +440,41 @@ class EventTable:
                 "json_path": spec.json_path,
                 "data_type": data_type,
             }
-        tmp = self._extracted_fields_path() + f".{uuid.uuid4().hex[:8]}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(list(current.values()), fh, indent=1)
-        self.backend.swing(tmp, self._extracted_fields_path())
+        return list(current.values())
+
+    def _fields_at(self, version: int) -> list[dict]:
+        """The extracted-field list snapshot ``version`` records ([] for
+        a plain table)."""
+        if version not in self._fields_cache:
+            try:
+                self._read_snapshot(f"snap-{version:08d}.json")
+            except FileNotFoundError:
+                raise ValueError(
+                    f"no snapshot version {version} (never committed, or expired)"
+                ) from None
+        return self._fields_cache[version]
 
     def extracted_fields(self) -> list[dict]:
-        """The union of every extraction config this table has seen."""
-        p = self._extracted_fields_path()
-        if not os.path.isfile(p):
-            return []
-        with open(p) as fh:
-            return json.load(fh)
+        """The committed field list widened by this handle's config — the
+        list its next commit records (and its appends extract)."""
+        latest = self.latest_version()
+        return self._merge_extracted_fields(
+            self._fields_at(latest) if latest is not None else None
+        )
 
-    def table_schema(self):
-        """The table's current read/write schema: the canonical system
-        schema, or — for extraction tables — system columns with payload
-        replaced by the union of extracted fields + _payload_overflow."""
-        fields = self.extracted_fields()
-        if not fields:
-            return EVENT_SCHEMA
-        from pyspark.sql import types as T
+    def table_schema(self, version: int | None = None):
+        """The table's committed schema AS OF ``version`` (latest when
+        None; the canonical event schema before the first commit): the
+        system columns, or — for extraction tables — system columns with
+        payload replaced by that snapshot's extracted fields +
+        _payload_overflow."""
+        from zombi_spark.ingest.extraction import table_schema_for_fields
 
-        from zombi_spark.ingest.extraction import _TYPE_MAP
-
-        type_of = {
-            "string": T.StringType(),
-            "int": T.IntegerType(),
-            "long": T.LongType(),
-            "double": T.DoubleType(),
-            "boolean": T.BooleanType(),
-            "binary": T.BinaryType(),
-        }
-        out = [f for f in EVENT_SCHEMA.fields if f.name != "payload"]
-        for f in fields:
-            out.append(T.StructField(f["name"], type_of[_TYPE_MAP[f["data_type"]]], True))
-        out.append(T.StructField("_payload_overflow", T.BinaryType(), True))
-        return T.StructType(out)
+        if version is None:
+            version = self.latest_version()
+        return table_schema_for_fields(
+            self._fields_at(version) if version is not None else []
+        )
 
     def extracted_stat_columns(self) -> dict[str, str]:
         """name → bounds kind (``int | string | float | bool``) for every
@@ -510,7 +515,9 @@ class EventTable:
         )
 
     def _read_snapshot(self, fname: str) -> dict:
-        return fastjson.load_from(os.path.join(self.meta_path, fname))
+        snap = fastjson.load_from(os.path.join(self.meta_path, fname))
+        self._fields_cache[snap["version"]] = snap.get("extracted_fields", [])
+        return snap
 
     def snapshots(self) -> list[dict]:
         """Snapshot log, oldest first (analogue of Iceberg ``t.snapshots``)."""
@@ -539,35 +546,18 @@ class EventTable:
 
     def table_metadata(self) -> dict | None:
         """Table-level metadata (schema / partition spec / sort order) —
-        the ``v{N}.metadata.json`` analogue (iceberg_storage.rs:1000-1161)."""
-        p = os.path.join(self.meta_path, "table.json")
-        if not os.path.isfile(p):
+        the ``v{N}.metadata.json`` analogue (iceberg_storage.rs:1000-1161),
+        derived from the latest snapshot; None before the first commit."""
+        version = self.latest_version()
+        if version is None:
             return None
-        with open(p) as fh:
-            return json.load(fh)
-
-    def _write_table_metadata(self) -> None:
-        p = os.path.join(self.meta_path, "table.json")
-        schema = json.loads(self.table_schema().json())
-        if os.path.isfile(p):
-            with open(p) as fh:
-                prev = json.load(fh)
-            if prev.get("schema") == schema:
-                return
-            # column-add evolution: the extracted-field union widened —
-            # rewrite with the new schema (field ORDER is stable: system
-            # cols, then extracted fields in first-seen order)
-        meta = {
+        return {
             "format_version": 2,
             "table_name": self.name,
-            "schema": schema,
+            "schema": self.table_schema(version).jsonValue(),
             "partition_spec": ["event_date", "event_hour"],
             "sort_order": ["timestamp_ms", "sequence"],
         }
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh, indent=1)
-        self.backend.swing(tmp, p)
 
     def _commit_snapshot(
         self,
@@ -585,9 +575,16 @@ class EventTable:
         or another writer races us to the same version file, raise
         :class:`CommitConflictError` — the caller rebases or aborts; a
         stale commit is never silently dropped (M3, compaction.rs:98-137).
+
+        The commit also records the table's schema: the parent's
+        extracted-field list widened by this handle's config (plain
+        tables record none). It is merged against exactly the parent the
+        version claim below is made on, so a writer that loses the claim
+        re-merges on its rebase and no widening is ever lost. A merge
+        refused against a rival's parent (a type clash, a plain table)
+        raises ``ValueError`` here; the staged files stay orphans.
         """
         os.makedirs(self.meta_path, exist_ok=True)
-        self._write_table_metadata()
         current = self.latest_version()
         if current != expected_parent:
             raise CommitConflictError(
@@ -595,6 +592,10 @@ class EventTable:
                 f"but current is {current}"
             )
         version = 0 if current is None else current + 1
+        parent = self._read_snapshot(f"snap-{current:08d}.json") if current is not None else {}
+        fields = self._merge_extracted_fields(
+            None if current is None else parent.get("extracted_fields", [])
+        )
         added = added or []
         removed = removed or []
         # the streams map (stream identity → last committed micro-batch
@@ -603,10 +604,8 @@ class EventTable:
         # and its checkpoint write would erase the replay guard and a
         # crash-replay would append unkeyed events twice — carry it
         # forward exactly like watermarks
-        if "streams" not in summary:
-            parent_snap = self.latest_snapshot()
-            if parent_snap and parent_snap.get("streams"):
-                summary = {**summary, "streams": dict(parent_snap["streams"])}
+        if "streams" not in summary and parent.get("streams"):
+            summary = {**summary, "streams": dict(parent["streams"])}
         snap = {
             "version": version,
             "parent_version": current,
@@ -616,9 +615,11 @@ class EventTable:
             "added": added,
             "removed": removed,
         }
-        # merge-on-read position-delete deltas ride the same snapshot
-        # (keys absent on commits that touch none — old snapshot shape
-        # unchanged)
+        # the extracted-field list and the merge-on-read position-delete
+        # deltas ride the same snapshot (keys absent on plain tables and
+        # on commits that touch no deletes — old snapshot shape unchanged)
+        if fields:
+            snap["extracted_fields"] = fields
         if added_deletes:
             snap["added_deletes"] = added_deletes
         if removed_deletes:
@@ -664,24 +665,17 @@ class EventTable:
             ) from None
         finally:
             os.unlink(tmp)
+        self._fields_cache[version] = fields
         # Iceberg-v2 interop metadata: one v{N}.metadata.json per commit
         # plus real Avro manifest(s) + manifest list
         # (iceberg_storage.rs:1000-1161 contract)
         try:
             from zombi_spark.table.iceberg_meta import write_metadata_for_commit
 
-            if current is not None:
-                snap_for_meta = dict(snap)
-                snap_for_meta["parent_snapshot_hex"] = self._read_snapshot(
-                    f"snap-{current:08d}.json"
-                )["snapshot_id"]
-            else:
-                snap_for_meta = snap
             write_metadata_for_commit(
                 self.path,
                 self.name,
-                snap_for_meta,
-                spark_schema=self.table_schema(),
+                {**snap, "parent_snapshot_hex": parent["snapshot_id"]} if parent else snap,
                 active_entries_fn=lambda: self._active_files(version),
                 active_deletes_fn=lambda: self._active_delete_files(version),
                 backend=self.backend,
@@ -696,8 +690,7 @@ class EventTable:
                 from zombi_spark.table.iceberg_meta import rebuild_metadata
 
                 rebuild_metadata(
-                    self.path, self.name, self.snapshots(),
-                    spark_schema=self.table_schema(), backend=self.backend,
+                    self.path, self.name, self.snapshots(), backend=self.backend
                 )
                 logging.getLogger(__name__).warning(
                     "iceberg metadata rebuilt after: %s", exc
@@ -940,7 +933,7 @@ class EventTable:
             cols = ", ".join(
                 f"CAST(NULL AS {sql_type.get(f.dataType.simpleString(), 'VARCHAR')}) "
                 f"AS {f.name}"
-                for f in self.table_schema().fields
+                for f in self.table_schema(version).fields
             )
             return f"CREATE OR REPLACE VIEW {view} AS SELECT {cols} WHERE false"
         file_list = ", ".join(_json.dumps(os.path.abspath(f)) for f in sorted(files))
@@ -1044,20 +1037,17 @@ class EventTable:
         compiles to TakeOrderedAndProject over just these files). The
         caller still applies its own topic/partition filter — here they
         only prune the planned file set."""
+        if version is None:
+            version = self.latest_version()
         files = [
             e["file_path"]
             for e in self.plan_latest_files(n, version=version, topic=topic, partition=partition)
         ]
-        df = self._read_file_list(files)
+        df = self._read_file_list(files, version)
         if files:
             # merge-on-read: the planned files may hold tombstoned rows
             # (the row-count planning over-covers, never under-covers)
-            df = self._apply_position_deletes(
-                df,
-                self._active_delete_files(
-                    self.latest_version() if version is None else version
-                ),
-            )
+            df = self._apply_position_deletes(df, self._active_delete_files(version))
         return df
 
     # --------------------------------------------------------------- write
@@ -1088,10 +1078,13 @@ class EventTable:
         rows_per_partition: int | None = None,
         n_rows_total: int | None = None,
         parts_est: int | None = None,
+        *,
+        schema,
     ) -> list[dict]:
         """Write ``events`` into ``staging`` (hive layout), then move every
         parquet file into the data tree under a fresh unique name. Returns
         the manifest entries (with footer stats) of the moved files.
+        ``schema`` is the stored schema ``events`` carries.
 
         ``key_ndv`` is the batch's per-file idempotency-key NDV estimate
         (0 = unkeyed batch → no bloom at all). ``rows_per_partition`` is
@@ -1142,6 +1135,7 @@ class EventTable:
             expected_ndv=key_ndv if key_ndv is not None else cap,
             tiny=many_tiny_files,
             cap=cap,
+            schema=schema,
         )
         moved = self._move_staged_in(staging, prefix="", stats=stats)
         self._rmtree(staging)
@@ -1154,11 +1148,12 @@ class EventTable:
         expected_ndv: int | None,
         tiny: bool,
         cap: int | None,
+        schema,
     ) -> dict[str, dict] | None:
         """Route a shaped (repartitioned + partition-cols-first-sorted)
-        frame to staging parquet. Shared by append, compact and
-        delete_where — they produce the same hive layout and face the
-        same cost model.
+        frame carrying the stored ``schema`` to staging parquet. Shared
+        by append, compact and delete_where — they produce the same hive
+        layout and face the same cost model.
 
         Many-small-files fast path (the 25k ev/s gap, VERDICT r6 #3):
         parquet-mr pays ~3.5ms of writer setup/teardown PER FILE, so a
@@ -1172,8 +1167,8 @@ class EventTable:
         primitive schemas; everything else keeps the JVM vectorized
         writer, where big-file setup amortizes to zero.
         """
-        if expected_ndv == 0 and tiny and self._arrow_writable_schema():
-            return self._stage_arrow(shaped, staging, cap)
+        if expected_ndv == 0 and tiny and self._arrow_writable_schema(schema):
+            return self._stage_arrow(shaped, staging, cap, schema)
         writer = self._bloom_options(
             shaped.write.mode("overwrite").partitionBy("event_date", "event_hour"),
             expected_ndv=expected_ndv,
@@ -1193,7 +1188,7 @@ class EventTable:
         "float", "double", "boolean", "date",
     )
 
-    def _arrow_writable_schema(self) -> bool:
+    def _arrow_writable_schema(self, schema) -> bool:
         """The Arrow staging path is only taken for schemas whose
         parquet physical/logical types are byte-identical between
         parquet-mr and pyarrow (flat primitives). Anything else — e.g.
@@ -1202,11 +1197,11 @@ class EventTable:
         encodings across appends."""
         return all(
             f.dataType.simpleString() in self._ARROW_SAFE_TYPES
-            for f in self.table_schema().fields
+            for f in schema.fields
         )
 
     def _stage_arrow(
-        self, shaped: DataFrame, staging: str, cap: int | None
+        self, shaped: DataFrame, staging: str, cap: int | None, schema
     ) -> dict[str, dict]:
         """Write ``shaped`` (already repartitioned on the storage key and
         sorted partition-cols-first) into ``staging`` as the SAME hive
@@ -1238,8 +1233,7 @@ class EventTable:
         from pyspark.sql.types import StructType
 
         data_fields = [
-            f for f in self.table_schema().fields
-            if f.name not in ("event_date", "event_hour")
+            f for f in schema.fields if f.name not in ("event_date", "event_hour")
         ]
         arrow_schema = to_arrow_schema(StructType(data_fields))
         data_cols = [f.name for f in data_fields]
@@ -1565,32 +1559,35 @@ class EventTable:
         The snapshot records exactly the files THIS append staged and moved
         — never a directory listing — so parquet left by a crashed append
         is not adopted (the exactly-once contract for keyed events,
-        SPEC.md:752, survives retries).
+        SPEC.md:752, survives retries). A field-type clash with a writer
+        that committed first surfaces at commit (:meth:`_commit_snapshot`).
         """
+        from zombi_spark.ingest.extraction import (
+            FieldSpec,
+            TableSchemaConfig,
+            extract_payload,
+            table_schema_for_fields,
+        )
+
         t_start = time.perf_counter()
-        if self.extracted_fields():
+        fields = self.extracted_fields()
+        if fields:
             # schema-on-write extraction (§1.3): typed columns out of the
             # payload, remainder to _payload_overflow, payload dropped.
             # Input batches still arrive in the canonical system shape.
-            from zombi_spark.ingest.extraction import (
-                FieldSpec,
-                TableSchemaConfig,
-                extract_payload,
-            )
-
             cfg = TableSchemaConfig(
-                payload_format="json",
-                fields=[FieldSpec(**f) for f in self.extracted_fields()],
+                payload_format="json", fields=[FieldSpec(**f) for f in fields]
             )
             events = extract_payload(events.select(*[f.name for f in EVENT_SCHEMA.fields]), cfg)
-        cols = [f.name for f in self.table_schema().fields]
+        schema = table_schema_for_fields(fields)
         # cache: the batch is consumed twice (write + watermark aggregate);
         # without it the whole prepare_events lineage (two window shuffles)
         # would recompute for the tiny watermark frame
-        events = events.select(*cols).persist()
+        events = events.select(*schema.fieldNames()).persist()
         try:
             return self._append_prepared(
-                events, expected_watermarks, target_file_bytes, stream_commit, t_start
+                events, schema, expected_watermarks, target_file_bytes, stream_commit,
+                t_start,
             )
         finally:
             # without the finally, a failed stats job or staged write
@@ -1599,7 +1596,7 @@ class EventTable:
             events.unpersist()
 
     def _append_prepared(
-        self, events, expected_watermarks, target_file_bytes, stream_commit, t_start
+        self, events, schema, expected_watermarks, target_file_bytes, stream_commit, t_start
     ):
         """The post-prepare half of :meth:`append` (runs under the
         caller's persist + try/finally unpersist)."""
@@ -1680,6 +1677,7 @@ class EventTable:
             rows_per_partition=rows_per_partition,
             n_rows_total=n_rows_total,
             parts_est=sum(r["nparts"] for r in pstats),
+            schema=schema,
         )
         # Commit with bounded optimistic retry (the reference serializes
         # flush commits per topic with a mutex, iceberg_storage.rs:360-374;
@@ -1714,6 +1712,12 @@ class EventTable:
                 for k, v in streams.items()
                 if not (isinstance(v, dict) and v.get("at_ms", 0) < cutoff)
             }
+            if prior and "payload" in schema.fieldNames() and prior.get("extracted_fields"):
+                # staged plain on an empty table a rival then made an
+                # extraction table: committing would hide the payload
+                raise CommitConflictError(
+                    f"table {self.name!r} became an extraction table; re-prepare the batch"
+                )
             for key, hwm in batch_wm.items():
                 if wm.get(key, 0) != base_wm.get(key, 0):
                     raise CommitConflictError(
@@ -1742,8 +1746,9 @@ class EventTable:
         raise CommitConflictError("append could not commit after 5 rebases")
 
     # ---------------------------------------------------------------- read
-    def _read_file_list(self, files: list[str]) -> DataFrame:
-        """Read an explicit manifest-derived file list. Passing more
+    def _read_file_list(self, files: list[str], version: int | None = None) -> DataFrame:
+        """Read an explicit manifest-derived file list under the schema
+        of ``version`` (latest when None). Passing more
         paths than ``spark.sql.sources.parallelPartitionDiscovery.
         threshold`` (default 32) makes Spark launch a one-task-PER-PATH
         listing job before any data is touched — for a 1440-file
@@ -1755,11 +1760,12 @@ class EventTable:
         the threshold alone and tune ``...parallelPartitionDiscovery.
         parallelism`` instead — this override only widens the
         driver-side path, it never narrows it below Spark's default)."""
+        schema = self.table_schema(version)
         if not files:
-            return self.spark.createDataFrame([], self.table_schema())
+            return self.spark.createDataFrame([], schema)
         with _discovery_threshold(self.spark, len(files)):
             return (
-                self.spark.read.schema(self.table_schema())
+                self.spark.read.schema(schema)
                 .option("basePath", self.data_path)
                 .parquet(*files)
             )
@@ -1813,7 +1819,7 @@ class EventTable:
                 partition=partition,
             )
         ]
-        df = self._read_file_list(files)
+        df = self._read_file_list(files, version)
         if files:
             df = self._apply_position_deletes(
                 df, self._active_delete_files(version)
@@ -1903,7 +1909,7 @@ class EventTable:
         consumer that already processed a later-deleted row keeps its
         copy, exactly as with copy-on-write deletes."""
         files = [e["file_path"] for e in self.added_files(from_version, to_version)]
-        return self._read_file_list(files)
+        return self._read_file_list(files, to_version)
 
     def export_json(self, out_dir: str) -> None:
         """S6 legacy JSON segment sink (s3.rs:136-185): dump the committed
@@ -1969,7 +1975,7 @@ class EventTable:
                 cutoff = max(known) - retention_hours * 3_600_000
                 entries = self.scan_files(ts_min=cutoff, version=version)
         files = [e["file_path"] for e in entries]
-        probe = self._read_file_list(files)
+        probe = self._read_file_list(files, version)
         if files:
             # merge-on-read parity with copy-on-write: a taken-down row's
             # key leaves the idempotency history in both modes
@@ -2097,13 +2103,9 @@ class EventTable:
                             removed.append(os.path.join(sub, f))
                         os.rmdir(sub)
             for f in files:
-                # interrupted meta commits come in two shapes: dotted
-                # (.snap-*.json.tmp, .ROLLUP.json.*.tmp) AND undotted
-                # (table.json.tmp, extracted_fields.json.<hex>.tmp) — the
-                # old dot-only match left the undotted ones forever
-                if f.endswith(".tmp") and (
-                    f.startswith((".", "table.json", "extracted_fields.json"))
-                ):
+                # interrupted meta commits (.snap-*.json.tmp,
+                # .ROLLUP.json.*.tmp)
+                if f.startswith(".") and f.endswith(".tmp"):
                     full = os.path.join(dirpath, f)
                     if _expired(full):
                         os.remove(full)
@@ -2288,7 +2290,7 @@ class EventTable:
         # scan; stats and the idempotency-key bloom prune row groups
         # before decode; prior merge-on-read tombstones anti-joined out)
         hits = self._position_delete_probe(
-            self._read_file_list(sorted(candidates)), active_dels
+            self._read_file_list(sorted(candidates), expected_parent), active_dels
         ).where(hit)
         if mode == "merge-on-read":
             # the same frame feeds the count AND the position write
@@ -2331,7 +2333,7 @@ class EventTable:
         inputs = [candidates[p] for p in matched]
         survivors = (
             self._position_delete_probe(
-                self._read_file_list(sorted(matched)), active_dels
+                self._read_file_list(sorted(matched), expected_parent), active_dels
             )
             .drop("_zdel_file", "_zdel_pos")
             .where(~hit)
@@ -2353,6 +2355,7 @@ class EventTable:
             else self._target_records_per_file(128 * 1024 * 1024),
             tiny=0 < max_part_rows < 100_000,
             cap=None,
+            schema=self.table_schema(expected_parent),
         )
         added = self._move_staged_in(staging, prefix="deleted-", stats=wstats)
         self._rmtree(staging)
@@ -2574,8 +2577,7 @@ class EventTable:
                 from zombi_spark.table.iceberg_meta import rebuild_metadata
 
                 rebuild_metadata(
-                    self.path, self.name, self.snapshots(),
-                    spark_schema=self.table_schema(), backend=self.backend,
+                    self.path, self.name, self.snapshots(), backend=self.backend
                 )
                 logging.getLogger(__name__).warning(
                     "iceberg metadata rebuilt after expire: %s", exc
@@ -2674,7 +2676,7 @@ class EventTable:
             # compaction is how merge-on-read deletes become pure data
             active_dels = self._active_delete_files(expected_parent)
             df = self._apply_position_deletes(
-                self._read_file_list(all_paths), active_dels
+                self._read_file_list(all_paths, expected_parent), active_dels
             )
             staging = os.path.join(self.path, f".compact-{uuid.uuid4().hex}")
             # task count: each storage partition hashes to exactly ONE
@@ -2732,6 +2734,7 @@ class EventTable:
                 else self._target_records_per_file(128 * 1024 * 1024),
                 tiny=0 < max_part_rows < 100_000,
                 cap=cap,
+                schema=self.table_schema(expected_parent),
             )
             added = self._move_staged_in(staging, prefix="compacted-", stats=wstats)
             self._rmtree(staging)

@@ -35,38 +35,6 @@ import os
 import time
 import uuid
 
-# Stable Iceberg field-ids for the canonical 8-column event schema
-# (contracts/storage.rs:204-211). Order matches ingest.batch.EVENT_SCHEMA.
-_FIELDS = [
-    {"id": 1, "name": "sequence", "required": True, "type": "long"},
-    {"id": 2, "name": "topic", "required": True, "type": "string"},
-    {"id": 3, "name": "partition", "required": True, "type": "int"},
-    {"id": 4, "name": "payload", "required": True, "type": "binary"},
-    {"id": 5, "name": "timestamp_ms", "required": True, "type": "long"},
-    {"id": 6, "name": "idempotency_key", "required": False, "type": "string"},
-    {"id": 7, "name": "event_date", "required": True, "type": "date"},
-    {"id": 8, "name": "event_hour", "required": True, "type": "int"},
-]
-
-_SCHEMA = {"schema-id": 0, "type": "struct", "fields": _FIELDS}
-
-_PARTITION_SPEC = {
-    "spec-id": 0,
-    "fields": [
-        {"name": "event_date", "transform": "identity", "source-id": 7, "field-id": 1000},
-        {"name": "event_hour", "transform": "identity", "source-id": 8, "field-id": 1001},
-    ],
-}
-
-_SORT_ORDER = {
-    "order-id": 1,
-    "fields": [
-        {"transform": "identity", "source-id": 5, "direction": "asc", "null-order": "nulls-first"},
-        {"transform": "identity", "source-id": 1, "direction": "asc", "null-order": "nulls-first"},
-    ],
-}
-
-
 def snapshot_id_long(snapshot_hex: str) -> int:
     """Map our uuid-hex snapshot id onto Iceberg's required long id
     (60 bits of the hex — deterministic, positive, collision-safe at any
@@ -108,7 +76,7 @@ _SPARK_TO_ICEBERG = {
 def fields_for_spark_schema(spark_schema) -> list[dict]:
     """Iceberg field dicts for a Spark StructType in declaration order
     (ids assigned 1..n here; evolution keeps existing ids — see
-    :func:`_evolve_schema`)."""
+    :func:`_use_schema`)."""
     out = []
     for i, f in enumerate(spark_schema.fields):
         out.append(
@@ -122,32 +90,40 @@ def fields_for_spark_schema(spark_schema) -> list[dict]:
     return out
 
 
-def _evolve_schema(meta: dict, spark_schema) -> None:
-    """Column-add + safe-promotion schema evolution, Iceberg-style: if
-    the table's current Spark schema has columns the metadata's current
-    schema lacks, OR an existing column was promoted (int -> long, the
-    one promotion the table layer allows — Iceberg spec "int to long"),
-    append a NEW schema entry — existing columns keep their field ids
-    (promotions too, per spec), new ones get fresh ids past
-    last-column-id — and point current-schema-id at it. (Other type
-    changes are rejected upstream; drops don't occur.)"""
-    promotions = {("int", "long")}
+def _snapshot_schema(snap: dict):
+    """The Spark schema a committed snapshot records: its extracted-field
+    list (``extracted_fields``; absent on plain tables) over the system
+    columns."""
+    from zombi_spark.ingest.extraction import table_schema_for_fields
+
+    return table_schema_for_fields(snap.get("extracted_fields", []))
+
+
+def _use_schema(meta: dict, spark_schema) -> None:
+    """Point ``current-schema-id`` at the schema entry whose columns
+    (name → Iceberg type) are ``spark_schema``'s. When no entry matches,
+    evolve Iceberg-style from the current entry and append the result:
+    column-add plus the one promotion the table layer allows (int ->
+    long, Iceberg spec "int to long"). Existing columns keep their field
+    ids (promotions too, per spec), new ones get fresh ids past
+    last-column-id. (Other type changes are rejected upstream; drops
+    don't occur.)"""
+    want = [
+        (f.name, not f.nullable, _SPARK_TO_ICEBERG[f.dataType.simpleString()])
+        for f in spark_schema.fields
+    ]
+    cols = {n: t for n, _r, t in want}
+    for entry in meta["schemas"]:
+        if {f["name"]: f["type"] for f in entry["fields"]} == cols:
+            meta["current-schema-id"] = entry["schema-id"]
+            return
     current = meta["schemas"][meta["current-schema-id"]]
     by_name = {f["name"]: f for f in current["fields"]}
-    want = [(f.name, not f.nullable, _SPARK_TO_ICEBERG[f.dataType.simpleString()]) for f in spark_schema.fields]
-    promoted = {
-        n for n, _r, t in want
-        if n in by_name and (by_name[n]["type"], t) in promotions
-    }
-    if set(n for n, _r, _t in want) == set(by_name) and not promoted:
-        return
     next_id = meta["last-column-id"]
     fields = []
     for name, required, typ in want:
-        if name in promoted:
-            fields.append({**by_name[name], "type": typ})  # same id, wider type
-        elif name in by_name:
-            fields.append(dict(by_name[name]))
+        if name in by_name:
+            fields.append({**by_name[name], "type": typ})  # same id, maybe wider
         else:
             next_id += 1
             fields.append({"id": next_id, "name": name, "required": required, "type": typ})
@@ -161,8 +137,8 @@ def _evolve_schema(meta: dict, spark_schema) -> None:
     meta["last-column-id"] = max(next_id, meta["last-column-id"])
 
 
-def _fresh_metadata(table_path: str, table_name: str, spark_schema=None) -> dict:
-    fields = fields_for_spark_schema(spark_schema) if spark_schema is not None else _FIELDS
+def _fresh_metadata(table_path: str, table_name: str, spark_schema) -> dict:
+    fields = fields_for_spark_schema(spark_schema)
     fid = {f["name"]: f["id"] for f in fields}
     # partition spec / sort order reference field ids of THIS schema —
     # for extraction tables the ids shift (payload is dropped), so derive
@@ -450,7 +426,6 @@ def write_metadata_for_commit(
     table_path: str,
     table_name: str,
     snap: dict,
-    spark_schema=None,
     active_entries_fn=None,
     active_deletes_fn=None,
     backend=None,
@@ -459,19 +434,21 @@ def write_metadata_for_commit(
     write ``v{version+1}.metadata.json`` (+ version-hint). Returns the path.
 
     ``snap`` is the EventTable snapshot dict just committed (version,
-    snapshot_id, parent_version, committed_at_ms, operation, added/removed).
-    ``spark_schema`` is the table's CURRENT Spark schema: extraction
-    tables advertise their real columns, and a widened schema appends a
-    new schema entry (column-add evolution, ids preserved).
+    snapshot_id, parent_version, committed_at_ms, operation, added/removed,
+    and, on extraction tables, the extracted-field list
+    ``extracted_fields``). The schema comes from that list alone:
+    extraction tables advertise their real columns, a widened list
+    appends a new schema entry (column-add evolution, ids preserved),
+    and the Iceberg snapshot records the schema-id of its own commit.
     ``active_entries_fn`` lazily yields the active file entries as of this
     commit — consulted only when a full manifest rewrite is needed
     (removal commits, or recovery from a missing previous Avro list).
     """
+    spark_schema = _snapshot_schema(snap)
     meta = current_metadata(table_path) or _fresh_metadata(
         table_path, table_name, spark_schema
     )
-    if spark_schema is not None:
-        _evolve_schema(meta, spark_schema)
+    _use_schema(meta, spark_schema)
     mdir = metadata_dir(table_path)
     os.makedirs(mdir, exist_ok=True)
 
@@ -515,8 +492,8 @@ def write_metadata_for_commit(
             "added-data-files": str(len(snap.get("added", []))),
             "removed-data-files": str(len(snap.get("removed", []))),
         },
-        # snapshots resolve against the schema current AT COMMIT TIME —
-        # after column-add evolution that is the evolved entry, not 0
+        # the schema this commit recorded — after column-add evolution
+        # that is the evolved entry, not 0
         "schema-id": meta["current-schema-id"],
     }
     if meta["current-snapshot-id"] != -1 and parent_hex is not None:
@@ -535,52 +512,38 @@ def write_metadata_for_commit(
 
 
 def rebuild_metadata(
-    table_path: str, table_name: str, snapshots: list[dict], spark_schema=None, backend=None
+    table_path: str, table_name: str, snapshots: list[dict], backend=None
 ) -> str:
     """Regenerate the Iceberg metadata from the authoritative snapshot
     log (recovery path for a lost/failed metadata write): one fresh
     metadata carrying every live snapshot, written as the next version.
+    Each snapshot's schema comes from the log itself (its recorded
+    extracted-field list), so every rebuilt snapshot gets the schema-id
+    of its own commit.
 
     Iceberg requires a STABLE table-uuid across the table's whole life —
     clients validating uuid continuity reject a table whose uuid changes
     — so a rebuild adopts the prior metadata's uuid when one exists and
-    mints a fresh one only for a genuinely new table. The prior SCHEMA
-    HISTORY and each snapshot's commit-time schema-id are carried over
-    the same way (the engine's own snapshot log doesn't record schema
-    evolution points, so without the prior metadata a rebuild can only
-    resolve every snapshot against the current schema — documented
-    information loss in the corrupt-prior case)."""
-    meta = _fresh_metadata(table_path, table_name, spark_schema)
+    mints a fresh one only for a genuinely new table. The prior schema
+    list is adopted the same way, so schema-ids and field ids stay those
+    clients have already seen."""
+    meta = _fresh_metadata(
+        table_path, table_name, _snapshot_schema(snapshots[0] if snapshots else {})
+    )
     try:
         prior = current_metadata(table_path)
     except Exception:
         prior = None  # corrupt prior metadata: rebuild proceeds fresh
-    prior_schema_ids: dict[int, int] = {}
     if prior is not None:
         if prior.get("table-uuid"):
             meta["table-uuid"] = prior["table-uuid"]
-        # keep the evolution history: prior schemas superset the fresh
-        # single-entry list whenever the table evolved — then RE-EVOLVE
-        # against the current Spark schema, because the lost write may
-        # have been exactly the commit that added a column (the prior
-        # file predates it; without this the rebuilt current schema
-        # would silently drop the new column the data files carry)
-        if len(prior.get("schemas", [])) > len(meta["schemas"]):
+        if prior.get("schemas"):
             meta["schemas"] = prior["schemas"]
-            meta["current-schema-id"] = prior["current-schema-id"]
             meta["last-column-id"] = prior["last-column-id"]
-            if spark_schema is not None:
-                _evolve_schema(meta, spark_schema)
-        prior_schema_ids = {
-            s["snapshot-id"]: s.get("schema-id", 0) for s in prior.get("snapshots", [])
-        }
     mdir = metadata_dir(table_path)
     os.makedirs(mdir, exist_ok=True)
     from zombi_spark.table import manifests as MF
 
-    field_ids = _field_ids(meta)
-    pfields = _avro_partition_fields(meta)
-    schema_json = json.dumps(meta["schemas"][meta["current-schema-id"]])
     spec_json = json.dumps(meta["partition-specs"][meta["default-spec-id"]]["fields"])
     prev_sid = None
     active: dict[str, dict] = {}
@@ -603,14 +566,18 @@ def rebuild_metadata(
                 active_dels.pop(p, None)
             for e in snap.get("added_deletes", []):
                 active_dels[e["file_path"]] = e
+        _use_schema(meta, _snapshot_schema(snap))
+        schema_id = meta["current-schema-id"]
+        schema_json = json.dumps(meta["schemas"][schema_id])
         added_paths = {_norm_entry(e)["file_path"] for e in snap.get("added", [])}
         entries = [
             (MF.ADDED if path in added_paths else MF.EXISTING, e)
             for path, e in sorted(active.items())
         ]
         mf = MF.write_manifest(
-            mdir, entries, sid, snap["version"] + 1, field_ids, pfields,
-            schema_json, spec_json, field_types=_field_types(meta),
+            mdir, entries, sid, snap["version"] + 1, _field_ids(meta),
+            _avro_partition_fields(meta), schema_json, spec_json,
+            schema_id=schema_id, field_types=_field_types(meta),
         )
         mfs = [mf]
         if active_dels:
@@ -635,9 +602,7 @@ def rebuild_metadata(
                 "added-data-files": str(len(snap.get("added", []))),
                 "removed-data-files": str(len(snap.get("removed", []))),
             },
-            # commit-time schema-id recovered from the prior metadata
-            # when it survives; current schema otherwise (see docstring)
-            "schema-id": prior_schema_ids.get(sid, meta["current-schema-id"]),
+            "schema-id": schema_id,
         }
         if prev_sid is not None:
             ice["parent-snapshot-id"] = prev_sid

@@ -52,18 +52,19 @@ class CatalogHTTPError(Exception):
         self.status = status
 
 
-def _metadata_location(table_path: str) -> str:
+def _metadata_location(table_path: str) -> str | None:
     """The Iceberg v2 ``v{N}.metadata.json`` when the table has one
     (resolved via version-hint — what a real Iceberg REST catalog serves),
-    else the private ``table.json``."""
+    else None: a table with no commit yet has no Iceberg metadata, and
+    the REST spec allows a null ``metadata-location``."""
     import os
 
     hint = os.path.join(table_path, "metadata", "version-hint.text")
-    if os.path.isfile(hint):
-        with open(hint) as fh:
-            v = fh.read().strip()
-        return os.path.join(table_path, "metadata", f"v{v}.metadata.json")
-    return f"{table_path}/_zombi_meta/table.json"
+    if not os.path.isfile(hint):
+        return None
+    with open(hint) as fh:
+        v = fh.read().strip()
+    return os.path.join(table_path, "metadata", f"v{v}.metadata.json")
 
 
 def _error_body(status: int, message: str) -> bytes:
